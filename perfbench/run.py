@@ -37,6 +37,7 @@ import gc
 import json
 import os
 import shutil
+import subprocess
 import sys
 import time
 
@@ -49,7 +50,8 @@ QUERY_PHASE = -1   # pass number the query phase's ops carry
 
 def parse_args(argv):
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--workload", required=True)
+    ap.add_argument("--workload", required=True,
+                    help="a workload name, or 'all' to run each in turn")
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
@@ -83,6 +85,12 @@ def main(argv=None) -> int:
     sys.path.insert(0, ROOT)
     from perfbench import harness, metrics, spec, workloads
 
+    if args.workload == "all":      # each workload in its own process
+        return max(subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--workload", name,
+             "--seed", str(args.seed), "--seconds", str(args.seconds),
+             "--trace", str(args.trace), "--size", args.size]).returncode
+            for name in workloads.NAMES)
     if args.workload not in workloads.NAMES:
         print(f"unknown workload {args.workload!r}; one of "
               f"{', '.join(workloads.NAMES)}", file=sys.stderr)
