@@ -13,8 +13,11 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import resource
 import shutil
 import signal
+import subprocess
+import sys
 import threading
 import time
 from dataclasses import dataclass, field
@@ -142,6 +145,108 @@ def shutdown(spark) -> None:
 
 
 # ---------------------------------------------------------------------
+# CPU time
+# ---------------------------------------------------------------------
+
+_TICK = os.sysconf("SC_CLK_TCK")
+
+
+def _ticks(pid: int) -> int:
+    """User + system clock ticks of ``pid``, its reaped children's
+    included."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+    except OSError:
+        return 0
+    return sum(int(x) for x in fields[11:15])
+
+
+def _tree_cpu_s(pid: int) -> float:
+    """CPU seconds used so far by ``pid`` and every process under it.
+    A reaped descendant counts in its parent's cumulative fields, so
+    each CPU second counts once. A kernel with paravirtual steal
+    accounting (the reference container's) leaves hypervisor steal
+    out of these counters."""
+    return sum(_ticks(p) for p in [pid] + _children(pid)) / _TICK
+
+
+class CpuMeter:
+    """CPU seconds of the program: the driver JVM (its JIT compiler
+    threads included) with its Python workers, plus this process (the
+    package's driver-side Python and the Py4J callback threads) less
+    the RSS sampler's thread."""
+
+    def __init__(self, jvm: int | None, sampler: "RssSampler | None" = None):
+        self.jvm, self.sampler = jvm, sampler
+
+    def read(self) -> float:
+        """CPU seconds so far; only differences mean anything."""
+        ru = resource.getrusage(resource.RUSAGE_SELF)
+        own = ru.ru_utime + ru.ru_stime
+        if self.sampler is not None:
+            own -= self.sampler.cpu_s()
+        return own + (_tree_cpu_s(self.jvm) if self.jvm else 0.0)
+
+
+# A fixed pure-CPU loop, timed by its own thread's CPU clock (which
+# leaves out waiting for a core and hypervisor steal) every 0.25 s.
+_PROBE = """
+import time
+while True:
+    c = time.thread_time()
+    x = 0
+    for i in range(50_000):
+        x += i * i % 7
+    print(f"{time.monotonic():.4f} {time.thread_time() - c:.6f}", flush=True)
+    time.sleep(0.25)
+"""
+
+# The probe loop's CPU time on the reference core that ``cpu_ref_s``
+# is scaled to: about its median on the 4-vCPU container the bounds
+# were set on, so the scaled figure reads close to the unscaled one.
+PROBE_REF_S = 0.010
+
+
+class SpeedProbe:
+    """The host's core speed over the run, from a small process that
+    times the same CPU-bound loop four times a second. On a shared
+    host core speed drifts by a fifth over tens of seconds (other
+    tenants, turbo, SMT siblings) and the program's CPU time drifts
+    with it; dividing by the probe's median loop time over the same
+    interval takes most of that out. The probe costs ~4 % of one
+    core and is stopped, and waited for, on leaving the block."""
+
+    def __enter__(self):
+        self.samples: list[tuple[float, float]] = []
+        self.proc = subprocess.Popen([sys.executable, "-c", _PROBE],
+                                     stdout=subprocess.PIPE, text=True)
+        self._t = threading.Thread(target=self._read, daemon=True)
+        self._t.start()
+        return self
+
+    def _read(self) -> None:
+        for line in self.proc.stdout:
+            t, s = line.split()
+            self.samples.append((float(t), float(s)))
+
+    def __exit__(self, *exc):
+        self.proc.terminate()
+        try:
+            self.proc.wait(timeout=10)
+        except subprocess.TimeoutExpired:
+            self.proc.kill()
+            self.proc.wait(timeout=10)
+        self._t.join(timeout=5)
+
+    def loop_s(self, t0: float, t1: float) -> tuple[float, int]:
+        """(median loop CPU seconds, samples) between two
+        ``time.monotonic()`` readings."""
+        xs = [s for t, s in self.samples if t0 <= t <= t1]
+        return median(xs), len(xs)
+
+
+# ---------------------------------------------------------------------
 # memory
 # ---------------------------------------------------------------------
 
@@ -170,14 +275,26 @@ class RssSampler:
         self.peak_kb = 0
         self._stop = threading.Event()
         self._t = threading.Thread(target=self._loop, daemon=True)
+        self._clock = None
+        self._cpu_final = None
+
+    def cpu_s(self) -> float:
+        """CPU seconds the sampling thread has used."""
+        if self._cpu_final is not None:
+            return self._cpu_final
+        if self._clock is None:
+            return 0.0
+        return time.clock_gettime(self._clock)
 
     def sample(self) -> None:
         kb = _pss_kb(self.pid) + sum(_pss_kb(c) for c in _children(self.pid))
         self.peak_kb = max(self.peak_kb, kb)
 
     def _loop(self) -> None:
+        self._clock = time.pthread_getcpuclockid(threading.get_ident())
         while not self._stop.wait(self.interval):
             self.sample()
+        self._cpu_final = time.thread_time()
 
     def __enter__(self):
         self.sample()
@@ -309,6 +426,7 @@ class OpRecord:
     ok: bool
     rows: int | None = None
     error: str = ""
+    cpu_s: float = 0.0
 
 
 class Runner:
@@ -327,6 +445,7 @@ class Runner:
         self._stack: list[int] = []
         self._op_id = 0
         self.engine = Engine(spark) if trace else None
+        self.cpu: CpuMeter | None = None   # set once the JVM is known
         self.trace_s = 0.0        # time spent in the tracer's own reads
         self.notes: dict[int, dict[str, float]] = {}
         self.op_pass: dict[int, int] = {}
@@ -362,6 +481,7 @@ class Runner:
         self.op_pass[self._op_id] = self.pass_no
         build_s = action_s = 0.0
         ok, err, value = True, "", None
+        cpu0 = self.cpu.read() if self.cpu else 0.0
         t0 = time.perf_counter()
         actioned = None
         with self.span(name, layer) as sp:
@@ -381,6 +501,7 @@ class Runner:
             except Exception as exc:  # noqa: BLE001 - counted as failed op
                 ok, err = False, f"{type(exc).__name__}: {exc}"[:500]
         seconds = time.perf_counter() - t0
+        cpu_s = self.cpu.read() - cpu0 if self.cpu else 0.0
         if ok and check is not None:
             try:
                 check(value)
@@ -395,7 +516,7 @@ class Runner:
             self.trace_s += time.perf_counter() - t
         rows = len(value) if isinstance(value, list) else None
         self.ops.append(OpRecord(name, layer, self.pass_no, seconds, build_s,
-                                 action_s, query, ok, rows, err))
+                                 action_s, query, ok, rows, err, cpu_s))
         return value if ok else None
 
     def note(self, key: str, value: float) -> None:

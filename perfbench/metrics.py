@@ -4,16 +4,23 @@ per-layer metrics named in ``spec``."""
 from __future__ import annotations
 
 from perfbench import spec
-from perfbench.harness import median, self_times, tail
+from perfbench.harness import PROBE_REF_S, median, self_times, tail
 
 
 def end_to_end(setup_s: float, passes: dict[int, float], ops,
-               peak_rss_kb: int) -> dict[str, dict]:
+               peak_rss_kb: int, speed: tuple[float, int]) -> dict[str, dict]:
+    """``speed``: the speed probe's median loop CPU seconds over the
+    ops, and its sample count."""
     warm = [s for p, s in passes.items() if p > 1]
     queries = [o.seconds for o in ops if o.query and o.ok]
     tail_s, tail_pct = tail(queries)
+    cpu_s = sum(o.cpu_s for o in ops)
+    loop_s, n = speed
     return {
         "setup_s": _m(setup_s, 1),
+        "cpu_s": _m(cpu_s, len(ops)),
+        "cpu_ref_s": _m(cpu_s * PROBE_REF_S / loop_s, len(ops),
+                        probe_loop_s=loop_s, probe_samples=n),
         "first_pass_s": _m(passes.get(1, 0.0), 1 if passes else 0),
         # detail only: at BENCHMARK.json's run length a run is one pass
         "pass_s": _m(median(warm) if warm else None, len(warm)),
@@ -127,6 +134,7 @@ def per_layer(r, passes: dict[int, float], cores: int,
             if s.layer == layer and _pass_of(r, s) == p)), len(warm))
 
     put("trace.pass_s", median([passes[p] for p in warm]), len(warm))
+    put("trace.cpu_s", sum(o.cpu_s for o in r.ops), len(r.ops))
     return out
 
 

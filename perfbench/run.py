@@ -23,11 +23,11 @@ With ``--trace 0`` the last stdout line carries the end-to-end
 metrics; with ``--trace 1`` every pass is traced (a span per call
 site, Spark status-store counters per op) and the last line carries
 the per-layer metrics, the tracer's own time per pass and the traced
-run's pass time (against the untraced runs' ``first_pass_s``: the
-tracing overhead). The line before it and the artifact under
-``.perfbench/artifacts/`` hold every metric with its sample count,
-the input sizes and digest, the host load stamp and (traced) the
-spans.
+run's pass time and op CPU (against the untraced runs'
+``first_pass_s`` and ``cpu_s``: the tracing overhead). The line
+before it and the artifact under ``.perfbench/artifacts/`` hold every
+metric with its sample count, the input sizes and digest, the host
+load stamp and (traced) the spans.
 """
 
 from __future__ import annotations
@@ -129,7 +129,10 @@ def main(argv=None) -> int:
     # or not.
     n_passes = max(1, round(args.seconds / wl.PASS_S))
     passes: dict[int, float] = {}
-    with harness.RssSampler(harness.jvm_pid()) as rss:
+    jvm = harness.jvm_pid()
+    with harness.SpeedProbe() as probe, harness.RssSampler(jvm) as rss:
+        r.cpu = harness.CpuMeter(jvm, rss)
+        w0 = time.monotonic()
         start = time.perf_counter()
         for _ in range(n_passes):
             r.pass_no += 1
@@ -148,17 +151,21 @@ def main(argv=None) -> int:
         q0 = time.perf_counter()
         wl.queries(r)
         query_phase_s = time.perf_counter() - q0
-    if hasattr(wl, "gate"):     # once-per-run checks, outside any pass
-        r.pass_no = 0
-        wl.gate(r)
+        if hasattr(wl, "gate"):     # once-per-run checks, outside any pass
+            r.pass_no = 0
+            wl.gate(r)
+        speed = probe.loop_s(w0, time.monotonic())
     t_down = time.perf_counter()
     harness.shutdown(spark)
     teardown_s = time.perf_counter() - t_down
 
+    if not speed[1]:
+        print("the speed probe gave no samples", file=sys.stderr)
+        return 3
     attempted = len(r.ops)
     failed = sum(1 for o in r.ops if not o.ok)
     e2e = metrics.end_to_end(import_s + get_spark_s, passes, r.ops,
-                             rss.peak_kb)
+                             rss.peak_kb, speed)
     if args.trace:
         detail = metrics.per_layer(r, passes, cores, get_spark_s)
         units = spec.per_layer()

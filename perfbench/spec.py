@@ -6,17 +6,18 @@ from __future__ import annotations
 
 END_TO_END = {
     "setup_s": "s",
-    "first_pass_s": "s",
+    "cpu_ref_s": "s",
     "peak_rss_mb": "MB",
 }
 
-# Printed on the detail line: the median warm pass (when a run makes
-# more than one pass) and the query-phase latencies. The latencies are
-# also per-layer metrics rather than gated end-to-end ones: sub-second
-# queries on a shared host swing with hypervisor steal far beyond any
-# usable bound (see NOTES.md).
+# Printed on the detail line: the unscaled CPU seconds, the cold
+# pass's wall time, the median warm pass (when a run makes more than
+# one pass) and the query-phase latencies. The wall times are not
+# gated: on a shared host they swing with hypervisor steal and core
+# speed beyond the largest bound allowed (see NOTES.md). The latencies
+# are also per-layer metrics.
 QUERY = {"query_p50_s": "s", "query_tail_s": "s"}
-DETAIL = {"pass_s": "s", **QUERY}
+DETAIL = {"cpu_s": "s", "first_pass_s": "s", "pass_s": "s", **QUERY}
 
 # op name -> per-layer time metric(s). Ops with a build/action split
 # report both phases; the others report the whole call.
@@ -88,4 +89,5 @@ def per_layer() -> dict[str, str]:
     for layer in SELF_LAYERS:
         m[f"self.{layer}_s"] = "s"
     m["trace.pass_s"] = "s"
+    m["trace.cpu_s"] = "s"
     return m

@@ -12,6 +12,7 @@ import json
 import os
 import subprocess
 import sys
+import time
 
 import pytest
 
@@ -84,6 +85,24 @@ def test_self_time_subtracts_children():
          harness.Span("fsio.rename", "fsio", 1.0, 1, 0, end=4.0),
          harness.Span("fsio.write", "fsio", 5.0, 1, 0, end=6.0)]
     assert harness.self_times(s) == [6.0, 3.0, 1.0]
+
+
+def test_tree_cpu_counts_reaped_children():
+    before = harness._tree_cpu_s(os.getpid())
+    subprocess.run([sys.executable, "-c",
+                    "import time\nt = time.process_time()\n"
+                    "while time.process_time() - t < 0.3: pass"],
+                   check=True)
+    assert harness._tree_cpu_s(os.getpid()) - before >= 0.25
+
+
+def test_speed_probe_samples_and_stops():
+    with harness.SpeedProbe() as probe:
+        t0 = time.monotonic()
+        time.sleep(1.5)
+        loop_s, n = probe.loop_s(t0, time.monotonic())
+    assert n >= 3 and loop_s > 0
+    assert probe.proc.poll() is not None
 
 
 def test_benchmark_json_matches_spec():
