@@ -77,7 +77,7 @@ Concurrency contract by verb pair (pytest-pinned where marked *):
   touched buckets' generations, and every folded delta/tombstone
   batch are untouched in latest* (disjoint-bucket upserts both
   land*); otherwise CommitConflict* (two upserts dirtying one
-  bucket*). An upsert composing over tombstones additionally
+  bucket*). A merge or upsert composing over tombstones additionally
   requires the outstanding tombstone set unchanged* (a concurrent
   delete must not be resurrected).
 - ``write`` (CREATE OR REPLACE) and ``restore``: last-writer-wins by
@@ -580,75 +580,106 @@ def _commit(spark: SparkSession, path: str, manifest: dict | None,
     raise AssertionError("unreachable")
 
 
-def _rebase_bucket_rewrite(latest: dict, base: dict, touched,
-                           survivors, gen: str, new_stats: dict,
-                           op: str, folded_deltas=(),
-                           folded_tombstones=(),
-                           require_tombstones_unchanged: bool = False,
-                           gen_cols: list[str] | None = None) -> dict:
-    """Merge a bucket-rewrite mutation (its generations computed and
-    written against ``base``) onto ``latest`` after a commit
-    collision. Safe iff everything the rewrite DEPENDED ON is
-    untouched: the spec, the prior generation of every touched
-    bucket, and any delta/tombstone batches it folded; anything else
-    a concurrent committer changed (new deltas, new tombstones,
-    other buckets' generations) carries through unchanged — exactly
-    the WriteSerializable merge rule (blind appends and disjoint
-    rewrites both land; overlapping rewrites conflict)."""
-    if latest.get("spec") != base.get("spec"):
-        _conflict(op, latest, "changed the layout spec")
-    lg, bg = latest.get("gens", {}), base.get("gens", {})
-    for k in touched:
-        if lg.get(str(k)) != bg.get(str(k)):
-            _conflict(op, latest, f"rewrote bucket {k}")
-    for d in folded_deltas:
-        if d not in latest.get("deltas", []):
-            _conflict(op, latest, f"already folded delta batch {d}")
-    for t in folded_tombstones:
-        if t not in latest.get("tombstones", []):
-            _conflict(op, latest, f"already folded tombstone batch {t}")
-    if require_tombstones_unchanged and \
-            latest.get("tombstones", []) != base.get("tombstones", []):
-        _conflict(op, latest, "changed the outstanding tombstone set")
-    out = dict(latest)
-    out.pop("change_file", None)   # per-commit field, never inherited
-    gens, stats = dict(lg), dict(latest.get("stats", {}))
-    for k in touched:
-        stats.pop(str(k), None)
-        if k in survivors:
-            gens[str(k)] = gen
+def _rewrite_buckets(spark: SparkSession, path: str, base_v: int,
+                     base: dict, op: str, dirtied, rows: DataFrame,
+                     files_per_bucket: int, vacuum: bool,
+                     folded_deltas=(), folded_tombstones=(),
+                     require_tombstones_unchanged: bool = False,
+                     fields: dict | None = None) -> tuple[int, dict]:
+    """The one commit tail of every bucket rewrite (incremental
+    compaction, upsert/merge, optimize, box delete): write ``rows`` as
+    a new generation replacing the ``dirtied`` buckets of snapshot
+    ``base`` (version ``base_v``), read its metadata back, commit the
+    manifest flip, then — with ``vacuum`` — delete what the commit
+    superseded. That order is the crash-safety protocol: until the
+    commit lands the new generation is an invisible orphan, and
+    cleanup only ever follows a landed commit. ``fields`` are
+    per-commit manifest entries set on every attempt (a rewritten
+    tombstone set, ``change_file``). Returns
+    ``(version, committed_manifest)``.
+
+    After a commit collision the rewrite is merged onto the latest
+    snapshot. Safe iff everything it DEPENDED ON is untouched: the
+    spec, the prior generation of every dirtied bucket, and any
+    delta/tombstone batches it folded; anything else a concurrent
+    committer changed (new deltas, new tombstones, other buckets'
+    generations) carries through unchanged — exactly the
+    WriteSerializable merge rule (blind appends and disjoint rewrites
+    both land; overlapping rewrites conflict)."""
+    spec = base["spec"]
+    gen = _new_gen()
+    _write_clustered(rows, fsio._join(path, DATA_DIR), spec, gen,
+                     files_per_bucket)
+    survivors, new_stats, new_cols = _written_meta(spark, path, gen, spec)
+
+    def rebase(latest: dict) -> dict:
+        if latest.get("spec") != spec:
+            _conflict(op, latest, "changed the layout spec")
+        lg, bg = latest.get("gens", {}), base.get("gens", {})
+        for k in dirtied:
+            if lg.get(str(k)) != bg.get(str(k)):
+                _conflict(op, latest, f"rewrote bucket {k}")
+        for d in folded_deltas:
+            if d not in latest.get("deltas", []):
+                _conflict(op, latest, f"already folded delta batch {d}")
+        for t in folded_tombstones:
+            if t not in latest.get("tombstones", []):
+                _conflict(op, latest,
+                          f"already folded tombstone batch {t}")
+        if require_tombstones_unchanged and \
+                latest.get("tombstones", []) != base.get("tombstones", []):
+            _conflict(op, latest, "changed the outstanding tombstone set")
+        out = dict(latest)
+        out.pop("change_file", None)   # per-commit field, never inherited
+        gens, stats = dict(lg), dict(latest.get("stats", {}))
+        for k in dirtied:
+            stats.pop(str(k), None)
+            if k in survivors:
+                gens[str(k)] = gen
+            else:
+                gens.pop(str(k), None)
+        stats.update(new_stats)
+        out["gens"], out["stats"] = gens, stats
+        # per-generation column sets (schema evolution): carry entries
+        # for generations still live, record the new generation's
+        gcols = {**base.get("gen_columns", {}),
+                 **latest.get("gen_columns", {}), gen: new_cols}
+        live = set(gens.values())
+        out["gen_columns"] = {g: c for g, c in gcols.items() if g in live}
+        # foreign data roots (shallow clones): entries follow their
+        # generations — a rewritten bucket's new generation is local, so
+        # its old root entry dies with the old generation
+        groots = {**base.get("gen_roots", {}),
+                  **latest.get("gen_roots", {})}
+        groots = {g: r for g, r in groots.items() if g in live}
+        if groots:
+            out["gen_roots"] = groots
         else:
-            gens.pop(str(k), None)
-    stats.update(new_stats)
-    out["gens"], out["stats"] = gens, stats
-    # per-generation column sets (schema evolution): carry entries for
-    # generations still live, record the new generation's
-    gcols = {**base.get("gen_columns", {}),
-             **latest.get("gen_columns", {})}
-    if gen_cols is not None:
-        gcols[gen] = gen_cols
-    live = set(gens.values())
-    out["gen_columns"] = {g: c for g, c in gcols.items() if g in live}
-    # foreign data roots (shallow clones): entries follow their
-    # generations — a rewritten bucket's new generation is local, so
-    # its old root entry dies with the old generation
-    groots = {**base.get("gen_roots", {}), **latest.get("gen_roots", {})}
-    groots = {g: r for g, r in groots.items() if g in live}
-    if groots:
-        out["gen_roots"] = groots
-    else:
-        out.pop("gen_roots", None)
-    if folded_deltas:
-        fd = set(folded_deltas)
-        out["deltas"] = [d for d in latest.get("deltas", [])
-                         if d not in fd]
-    if folded_tombstones:
-        ft = set(folded_tombstones)
-        tt = [t for t in latest.get("tombstones", []) if t not in ft]
-        out["tombstones"] = tt
-        if not tt:
-            out.pop("tombstone_key", None)
-    return out
+            out.pop("gen_roots", None)
+        if folded_deltas:
+            fd = set(folded_deltas)
+            out["deltas"] = [d for d in latest.get("deltas", [])
+                             if d not in fd]
+        if folded_tombstones:
+            ft = set(folded_tombstones)
+            tt = [t for t in latest.get("tombstones", []) if t not in ft]
+            out["tombstones"] = tt
+            if not tt:
+                out.pop("tombstone_key", None)
+        out.update(fields or {})
+        return out
+
+    v, final = _commit(spark, path, rebase(base), op, base_v,
+                       rebase=rebase,
+                       metrics=_rewrite_metrics(
+                           dirtied, new_stats,
+                           deltas_folded=len(folded_deltas),
+                           tombstones_folded=len(folded_tombstones)))
+    if vacuum:
+        _cleanup_superseded(spark, path, base, final)
+        _set_min_live_version(spark, path, v)
+        fsio.prune_versions(spark, _manifest_path(path))
+    return v, final
 
 
 def version_at_timestamp(spark: SparkSession, path: str,
@@ -1761,6 +1792,22 @@ def _apply_tombstones(spark: SparkSession, path: str, manifest: dict,
     return df.join(keys, manifest["tombstone_key"], "left_anti")
 
 
+def _outstanding_delta(spark: SparkSession, path: str, manifest: dict,
+                       tomb: DataFrame | None) -> DataFrame | None:
+    """The snapshot's outstanding delta batches as one frame (None
+    when there are none), minus tombstoned keys — the rows a fold
+    routes into their buckets (a delta row for a tombstoned key was
+    never visible; ``tomb`` carries its own size-gated hint)."""
+    delta = None
+    for d in manifest.get("deltas", []):
+        dd = _read_delta_batch(spark, path, manifest, d)
+        delta = dd if delta is None else \
+            delta.unionByName(dd, allowMissingColumns=True)
+    if delta is not None and tomb is not None:
+        delta = delta.join(tomb, manifest["tombstone_key"], "left_anti")
+    return delta
+
+
 def compact_zordered(spark: SparkSession, path: str,
                      files_per_bucket: int = 1,
                      mode: str = "incremental",
@@ -1799,17 +1846,7 @@ def compact_zordered(spark: SparkSession, path: str,
     tomb_keys = _tombstone_keys(spark, path, manifest)
     if not deltas and tomb_keys is None and mode != "full":
         return spec
-    delta_frames = [_read_delta_batch(spark, path, manifest, d)
-                    for d in deltas]
-    delta = None
-    for f in delta_frames:
-        delta = f if delta is None else \
-            delta.unionByName(f, allowMissingColumns=True)
-    if delta is not None and tomb_keys is not None:
-        # delta rows for a tombstoned key fold away with the rest
-        # (tomb_keys carries its own size-gated broadcast hint)
-        delta = delta.join(tomb_keys,
-                           manifest["tombstone_key"], "left_anti")
+    delta = _outstanding_delta(spark, path, manifest, tomb_keys)
     if delta is not None and mode == "incremental":
         # The incremental fold reads the delta set TWICE — once for
         # the dirtied-bucket census (_touched_buckets) and once inside
@@ -1832,8 +1869,6 @@ def compact_zordered(spark: SparkSession, path: str,
             from aggregation_duckdb_spark.runtime import materialize
             delta = materialize(delta)
 
-    gen = _new_gen()
-    data_root = fsio._join(path, DATA_DIR)
     if mode == "full":
         # read_zordered applies this manifest's tombstones, so the
         # rebuild physically removes every tombstoned row. The read is
@@ -1848,7 +1883,9 @@ def compact_zordered(spark: SparkSession, path: str,
             full = full.unionByName(_rename_logical(manifest, delta),
                                     allowMissingColumns=True)
         new_spec = _respec_bounds(_spec_logical(manifest), full)
-        _write_clustered(full, data_root, new_spec, gen, files_per_bucket)
+        gen = _new_gen()
+        _write_clustered(full, fsio._join(path, DATA_DIR), new_spec, gen,
+                         files_per_bucket)
         buckets, stats, cols = _written_meta(spark, path, gen, new_spec)
 
         def rebase(latest: dict) -> dict:
@@ -1886,10 +1923,17 @@ def compact_zordered(spark: SparkSession, path: str,
                 out["last_batch_id"] = latest["last_batch_id"]
             return out
 
-        new_manifest = rebase(manifest)
-        commit_metrics = _rewrite_metrics(
-            buckets, stats, deltas_folded=len(deltas),
-            tombstones_folded=len(manifest.get("tombstones", [])))
+        v, final = _commit(spark, path, rebase(manifest), "compact_full",
+                           base_v, rebase=rebase,
+                           metrics=_rewrite_metrics(
+                               buckets, stats, deltas_folded=len(deltas),
+                               tombstones_folded=len(
+                                   manifest.get("tombstones", []))))
+        if vacuum:
+            _cleanup_superseded(spark, path, manifest, final)
+            _set_min_live_version(spark, path, v)
+            fsio.prune_versions(spark, _manifest_path(path))
+        return new_spec
     elif mode == "incremental":
         dirtied = set(_touched_buckets(delta, spec)) \
             if delta is not None else set()
@@ -1912,35 +1956,18 @@ def compact_zordered(spark: SparkSession, path: str,
                            manifest["tombstone_key"], "left_anti")
         merged = old.unionByName(delta, allowMissingColumns=True) \
             if delta is not None else old
-        _write_clustered(merged, data_root, spec, gen, files_per_bucket)
-        wb, new_stats, new_cols = _written_meta(spark, path, gen, spec)
-        survivors = set(wb)
-
-        def rebase(latest: dict) -> dict:
-            # dirtied buckets get fresh generations and zone maps;
-            # clean buckets keep theirs — mergeable onto any
-            # concurrent state that left the dirtied buckets and the
-            # folded delta/tombstone batches untouched
-            return _rebase_bucket_rewrite(
-                latest, manifest, dirtied, survivors, gen, new_stats,
-                "compact_incremental", folded_deltas=deltas,
-                folded_tombstones=list(manifest.get("tombstones", [])),
-                gen_cols=new_cols)
-
-        new_manifest = rebase(manifest)
-        new_spec = spec
-        commit_metrics = _rewrite_metrics(
-            dirtied, new_stats, deltas_folded=len(deltas),
-            tombstones_folded=len(manifest.get("tombstones", [])))
+        # dirtied buckets get fresh generations and zone maps; clean
+        # buckets keep theirs — mergeable onto any concurrent state
+        # that left the dirtied buckets and the folded delta/tombstone
+        # batches untouched
+        _rewrite_buckets(
+            spark, path, base_v, manifest, "compact_incremental",
+            dirtied, merged, files_per_bucket, vacuum,
+            folded_deltas=deltas,
+            folded_tombstones=list(manifest.get("tombstones", [])))
+        return spec
     else:
         raise ValueError(f"mode must be 'incremental' or 'full': {mode}")
-    v, final = _commit(spark, path, new_manifest, f"compact_{mode}",
-                       base_v, rebase=rebase, metrics=commit_metrics)
-    if vacuum:
-        _cleanup_superseded(spark, path, manifest, final)
-        _set_min_live_version(spark, path, v)
-        fsio.prune_versions(spark, _manifest_path(path))
-    return new_spec
 
 
 def read_zordered_box_dirs(spark: SparkSession, path: str,
@@ -1979,158 +2006,46 @@ def upsert_zordered(df: DataFrame, path: str, key_cols: list[str],
                     files_per_bucket: int = 1,
                     vacuum: bool = True,
                     emit_changes: bool = False) -> dict:
-    """MERGE INTO the Z-clustered table: rows of ``df`` REPLACE
-    same-key rows and new keys INSERT, touching only the buckets the
-    upsert lands in — the lakehouse merge shape on the manifest
-    layout. Mechanics mirror incremental compaction: route the upsert
-    batch to its zbuckets under the current spec, rewrite each dirtied
-    bucket as (old rows anti-joined on key) ∪ (new rows), commit the
-    manifest (atomic flip), then delete superseded generations. Cost
-    tracks the dirtied-bucket fraction, not table size.
+    """MERGE INTO the Z-clustered table, replace case: rows of ``df``
+    REPLACE same-key rows whole and new keys INSERT. This IS
+    :func:`merge_zordered` with a ``when_matched_update`` that SETs
+    every non-key, non-layout-dimension column to the batch's value
+    (``s.<col>``; NULL for a table column the batch lacks, and a
+    column only the batch carries is added) plus
+    ``when_not_matched_insert=True`` — one code path, so upsert keeps
+    merge's whole contract: only the buckets the batch lands in are
+    rewritten, keys match NULL-SAFELY, batch keys must be unique
+    (raises), upserted keys keep their LAYOUT-DIMENSION values (a key
+    whose dims changed is a delete+insert), CHECK constraints validate
+    the written rows, and outstanding key tombstones on the SAME key
+    columns compose (the GDPR-delete → re-crawl sequence: re-inserted
+    keys become visible in the same commit, other tombstoned keys stay
+    hidden; tombstones keyed differently raise — compact first).
+    ``emit_changes=True`` stores the commit's change rows under
+    ``_changes/`` for the change feed to read directly.
 
-    Contract (documented, the per-bucket bound depends on it):
-    - upserted keys must keep their LAYOUT-DIMENSION values — the old
-      row is found in the bucket the new row's dims map to; a key
-      whose (a_col, b_col) changed is a delete+insert, not an upsert
-      (the same rule Delta's file-skipping merge optimizes around);
-    - no outstanding delta batches (raises — run compact_zordered
-      first; deltas are raw unrouted files a keyed rewrite cannot
-      cheaply edit).
-
-    COMPOSES with outstanding key tombstones when they use the SAME
-    key columns (the standard GDPR-delete → re-crawl sequence:
-    ``delete_zordered_keys`` then upsert the fresh rows, no manual
-    compact in between): the upsert's keys are subtracted from the
-    outstanding tombstone set in the same commit — the re-inserted
-    rows are visible immediately, other tombstoned keys stay hidden —
-    and the dirtied buckets' rewrite physically folds their tombstone
-    victims for free. Tombstones keyed DIFFERENTLY still raise (the
-    key anti-join cannot express them; compact first).
-
-    ``emit_changes=True`` additionally stores the commit's exact
-    change rows (insert / update pre+post images, classified against
-    the VISIBLE old rows) under ``_changes/`` and records the name in
-    the manifest — the Delta Change-Data-Feed write path: the change
-    feed then reads them directly instead of diffing snapshot
-    endpoints, with no retention requirement."""
+    One contract differs from merge: upsert REFUSES outstanding delta
+    batches (raises — run compact_zordered first) where merge folds
+    them into its commit. Returns the layout spec."""
     spark = df.sparkSession
-    base_v, manifest = _latest(spark, path)
-    df = _batch_to_physical(manifest, df, "upsert_zordered")
-    key_cols = _phys_names(manifest, key_cols, "upsert_zordered")
+    snapshot = _latest(spark, path)
+    manifest = snapshot[1]
     if manifest.get("deltas"):
         raise ValueError(
             "upsert_zordered: outstanding delta batches "
             "— run compact_zordered(path) first")
-    old_tombs = list(manifest.get("tombstones", []))
-    if old_tombs and list(manifest.get("tombstone_key", [])) \
-            != list(key_cols):
-        raise ValueError(
-            f"upsert_zordered: outstanding tombstones are keyed "
-            f"{manifest.get('tombstone_key')}, upsert uses "
-            f"{list(key_cols)} — run compact_zordered(path) first")
-    spec = manifest["spec"]
-    _validate_check(df, spec, "upsert_zordered")
-    # the upsert batch's key set scales with USER input — gate its
-    # broadcast on an exact row count (Catalyst's estimate for a
-    # projection of an arbitrary user frame inherits the parent's
-    # byte stats and over-gates). The gate count and the
-    # dirtied-bucket list each fully scanned the batch before; ONE
-    # probe aggregate now serves both (count_distinct skips all-null
-    # key tuples a frame-distinct would keep — that can only
-    # under-count the GATE for rows whose keys can never match a
-    # stored row anyway, never change data; the zbucket set is
-    # bounded by 2^bucket_bits, the sanctioned model-sized collect).
-    zb_probe, _ = _zbucket_col(spec)
-    # nk gates the broadcast NULL-SAFELY: count_distinct over a
-    # struct counts key tuples containing nulls exactly as the
-    # frame-distinct below keeps them (bare count_distinct would
-    # silently skip them and under-gate). A null ZBUCKET — a row
-    # whose layout-dimension value is null — has no bucket to dirty
-    # and would slip past the rewrite while still being written;
-    # refuse it loudly in the same aggregate (the pre-round-15 probe
-    # failed on it too, via sorted(None)).
-    probe = df.agg(
-        F.count_distinct(F.struct(*[F.col(k) for k in key_cols]))
-        .alias("nk"),
-        F.sum(zb_probe.isNull().cast("long")).alias("__nullzb"),
-        F.collect_set(zb_probe).alias("bks")).first()
-    if int(probe["__nullzb"] or 0):
-        raise ValueError(
-            f"upsert_zordered: {int(probe['__nullzb'])} row(s) carry "
-            f"a NULL layout-dimension value — they map to no zbucket, "
-            f"so the keyed rewrite cannot place them; clean the batch "
-            f"or delete+append instead")
-    new_keys = broadcast_if_counted(
-        df.select(*key_cols).distinct(),
-        known_rows=int(probe["nk"] or 0))
-    dirtied = sorted(int(b) for b in probe["bks"])
-    old = read_zordered_box_dirs(spark, path, manifest, dirtied) \
-        .drop("zbucket")
-    keep = old.join(new_keys, key_cols, "left_anti")
-    remaining_name = None
-    if old_tombs:
-        tomb = _tombstone_keys(spark, path, manifest)
-        # fold the victims physically while the buckets are being
-        # rewritten anyway (non-dirtied buckets keep theirs hidden by
-        # the remaining tombstone set until the next compaction);
-        # tomb carries its own file-size-gated hint
-        keep = keep.join(tomb, key_cols, "left_anti")
-        remaining = tomb.join(new_keys, key_cols, "left_anti")
-        if remaining.count() > 0:
-            remaining_name = f"t-{uuid.uuid4().hex}"
-            remaining.write.mode("errorifexists").parquet(
-                fsio._join(path, TOMBSTONE_DIR, remaining_name))
-    merged = keep.unionByName(df, allowMissingColumns=True)
-    change_name = None
-    if emit_changes:
-        # writer-side CDF: classify against the VISIBLE old rows (a
-        # physically-present tombstoned key was already deleted, so
-        # its re-insert is an insert). Both classify inputs are
-        # RESTRICTED to the upserted keys (round 16): rows outside
-        # them are identical on both sides of the old
-        # (visible_old, merged) comparison and were filtered by the
-        # fingerprint anyway — an upsert never deletes, so the change
-        # set is exactly classify(visible_old ⋉ keys, batch). That
-        # turns the stored-changes pass from ~three dirtied-bucket
-        # re-executions (old + keep∪df) into one semi-joined bucket
-        # scan against the model-or-count-gated key set (guide §1.2
-        # step 1).
-        visible_old = old if not old_tombs else old.join(
-            tomb, key_cols, "left_anti")
-        change_name = _write_change_file(
-            _classify_diff(visible_old.join(new_keys, key_cols,
-                                            "left_semi"),
-                           df, key_cols), path)
-    gen = _new_gen()
-    _write_clustered(merged, fsio._join(path, DATA_DIR), spec, gen,
-                     files_per_bucket)
-    wb, new_stats, new_cols = _written_meta(spark, path, gen, spec)
-    survivors = set(wb)
-
-    def rebase(latest: dict) -> dict:
-        out = _rebase_bucket_rewrite(
-            latest, manifest, dirtied, survivors, gen, new_stats,
-            "upsert", folded_tombstones=old_tombs,
-            require_tombstones_unchanged=bool(old_tombs),
-            gen_cols=new_cols)
-        if remaining_name is not None:
-            out["tombstones"] = [remaining_name]
-            out["tombstone_key"] = list(key_cols)
-        if emit_changes:
-            out["change_file"] = change_name
-        return out
-
-    new_manifest = rebase(manifest)
-    v, final = _commit(spark, path, new_manifest, "upsert", base_v,
-                       rebase=rebase,
-                       metrics=_rewrite_metrics(
-                           dirtied, new_stats,
-                           tombstones_folded=len(old_tombs)))
-    if vacuum:
-        _cleanup_superseded(spark, path, manifest, final)
-        _set_min_live_version(spark, path, v)
-        fsio.prune_versions(spark, _manifest_path(path))
-    return spec
+    ren, _, _ = _col_mapping(manifest)
+    frozen = set(key_cols) | {ren.get(c, c) for c, _, _ in
+                              _spec_dims(manifest["spec"])}
+    replace = {c: "s.`{}`".format(c.replace("`", "``"))
+               for c in df.columns if c not in frozen}
+    missing = _logical_columns(spark, path, manifest) - set(df.columns)
+    replace.update({c: "NULL" for c in sorted(missing - frozen)})
+    _merge_core("upsert_zordered", df, path, key_cols,
+                when_matched_update=replace, when_not_matched_insert=True,
+                files_per_bucket=files_per_bucket, vacuum=vacuum,
+                emit_changes=emit_changes, snapshot=snapshot)
+    return manifest["spec"]
 
 
 def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
@@ -2151,16 +2066,18 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
     """Conditional MERGE INTO — the full Delta ``MERGE`` clause shape
     on the manifest layout (``WHEN MATCHED [AND cond] THEN UPDATE SET
     ... / DELETE``, ``WHEN NOT MATCHED [AND cond] THEN INSERT *``,
-    ``WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE/DELETE``),
-    generalizing :func:`upsert_zordered` (which is the
-    replace-whole-row special case):
+    ``WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE/DELETE``).
+    :func:`upsert_zordered` is its replace-whole-row case and runs
+    through this same code path:
 
     - ``when_matched_update``: {target column -> SQL expression};
       expressions may reference the target row as ``t.<col>`` and the
       source row as ``s.<col>`` (e.g. ``{"cnt": "t.cnt + s.cnt"}`` —
       the aggregate-merge shape). Applied to matched rows passing
       ``update_condition`` (a t/s-scoped boolean SQL expression;
-      default all matched).
+      default all matched). A target the table lacks ADDS the column
+      (schema evolution, as append and upsert do): NULL on target rows
+      the update does not set.
     - ``when_matched_delete``: True, or a t/s-scoped condition —
       matched rows passing it are deleted. Evaluated BEFORE the
       update clause (a row matches at most one clause, delete wins;
@@ -2181,10 +2098,11 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
       full-scan price for this clause; bound it with a condition when
       you can.
 
-    Contract, same bucket-bound reasoning as upsert:
+    Contract (the per-bucket bound depends on it):
     - the source carries the layout-dimension columns with the TARGET
       row's values for matched keys (dims are how the old row's
-      bucket is found); a key whose dims changed is a delete+insert;
+      bucket is found); a key whose dims changed is a delete+insert
+      (the same rule Delta's file-skipping merge optimizes around);
     - updates may not SET a key or layout-dimension column (raises —
       a moved row belongs to another bucket; delete+insert instead);
     - source keys must be unique (multiple matches per target row
@@ -2209,56 +2127,109 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
       tombstone set in the same commit (re-insert wins, other
       tombstoned keys stay hidden). Tombstones keyed on DIFFERENT
       columns than the merge still raise (the key anti-join cannot
-      express them; compact first). Like upsert, a re-inserted key
-      relies on the dims contract above — its old physical row must
-      live in a bucket this merge dirties.
+      express them; compact first). A re-inserted key relies on the
+      dims contract above — its old physical row must live in a
+      bucket this merge dirties.
 
     Only the buckets the source (plus any folded deltas) touches are
     rewritten; the commit is the usual atomic manifest flip with
     bucket-rewrite rebase on collision. CHECK constraints validate
     the updated and inserted rows before anything is written. Cost
     tracks the dirtied-bucket fraction plus outstanding delta size,
-    never table size. Reference lifecycle shape:
-    aggregation_example.sql's staged re-loads (seed INSERT + corrected
-    re-INSERT) are one conditional merge here."""
+    never table size. ``emit_changes=True`` additionally stores the
+    commit's exact change rows (insert / update pre+post images /
+    delete, classified against the VISIBLE old rows of the dirtied
+    buckets) under ``_changes/`` and records the name in the manifest
+    — the Delta Change-Data-Feed write path. Reference lifecycle
+    shape: aggregation_example.sql's staged re-loads (seed INSERT +
+    corrected re-INSERT) are one conditional merge here. Returns
+    {"buckets_rewritten", "version"}."""
+    return _merge_core(
+        "merge_zordered", source, path, key_cols, when_matched_update,
+        update_condition, when_matched_delete, when_not_matched_insert,
+        insert_condition, when_not_matched_by_source_update,
+        when_not_matched_by_source_update_condition,
+        when_not_matched_by_source_delete, files_per_bucket, vacuum,
+        emit_changes)
+
+
+def _merge_core(verb: str, source: DataFrame, path: str,
+                key_cols: list[str], when_matched_update=None,
+                update_condition=None, when_matched_delete=False,
+                when_not_matched_insert=True, insert_condition=None,
+                when_not_matched_by_source_update=None,
+                when_not_matched_by_source_update_condition=None,
+                when_not_matched_by_source_delete=False,
+                files_per_bucket: int = 1, vacuum: bool = True,
+                emit_changes: bool = False,
+                snapshot: tuple[int, dict] | None = None) -> dict:
+    """The one keyed-rewrite engine behind :func:`merge_zordered` and
+    :func:`upsert_zordered`. ``verb`` (the public name) prefixes every
+    error and names the commit in history (``merge``/``upsert``);
+    ``snapshot`` is a ``(version, manifest)`` pair the caller already
+    read, so the manifest is read once."""
     import functools as _ft
     import operator as _op
 
+    op = verb.removesuffix("_zordered")
     spark = source.sparkSession
-    base_v, manifest = _latest(spark, path)
+    base_v, manifest = snapshot or _latest(spark, path)
     # logical → physical at the boundary: the source batch, the merge
     # key, the SET-clause targets, and every clause expression (whole-
     # word identifier rewrite) — internals below run purely physical
-    source = _batch_to_physical(manifest, source, "merge_zordered")
-    key_cols = _phys_names(manifest, key_cols, "merge_zordered")
-    if when_matched_update:
-        when_matched_update = {
-            _phys_names(manifest, [c], "merge_zordered UPDATE SET")[0]:
-            _expr_physical(manifest, e)
-            for c, e in when_matched_update.items()}
-    update_condition = _expr_physical(manifest, update_condition)
-    insert_condition = _expr_physical(manifest, insert_condition)
-    if isinstance(when_matched_delete, str):
-        when_matched_delete = _expr_physical(manifest,
-                                             when_matched_delete)
-    if when_not_matched_by_source_update:
-        when_not_matched_by_source_update = {
-            _phys_names(manifest, [c],
-                        "merge_zordered NOT MATCHED BY SOURCE SET")[0]:
-            _expr_physical(manifest, e)
-            for c, e in when_not_matched_by_source_update.items()}
-    when_not_matched_by_source_update_condition = _expr_physical(
-        manifest, when_not_matched_by_source_update_condition)
-    if isinstance(when_not_matched_by_source_delete, str):
-        when_not_matched_by_source_delete = _expr_physical(
-            manifest, when_not_matched_by_source_delete)
+    source = _batch_to_physical(manifest, source, verb)
+    key_cols = _phys_names(manifest, key_cols, verb)
+
+    def px(e):     # clause flags (True/False/None) pass through
+        return _expr_physical(manifest, e) if isinstance(e, str) else e
+
+    def px_set(clause: dict | None, what: str) -> dict | None:
+        return clause and {
+            _phys_names(manifest, [c], f"{verb} {what}")[0]: px(e)
+            for c, e in clause.items()}
+
+    when_matched_update = px_set(when_matched_update, "UPDATE SET")
+    when_not_matched_by_source_update = px_set(
+        when_not_matched_by_source_update, "NOT MATCHED BY SOURCE SET")
+    (update_condition, insert_condition, when_matched_delete,
+     when_not_matched_by_source_update_condition,
+     when_not_matched_by_source_delete) = map(px, (
+         update_condition, insert_condition, when_matched_delete,
+         when_not_matched_by_source_update_condition,
+         when_not_matched_by_source_delete))
+
+    def gate(base: Column, cond) -> Column:
+        """``base`` narrowed by a clause flag: True keeps it, a SQL
+        condition ANDs in (NULL reads as false), a falsy flag is
+        never true."""
+        if cond is True:
+            return base
+        if cond:
+            return base & F.coalesce(F.expr(cond), F.lit(False))
+        return F.lit(False)
+
+    def not_matched_by_source(base: Column) -> tuple[Column, Column]:
+        """(delete, update) predicates of the NOT MATCHED BY SOURCE
+        clauses over rows satisfying ``base`` — delete first, update
+        second, t-scoped (there is no source row to reference); the
+        bucket scan and the rewrite share this one definition."""
+        d = gate(base, when_not_matched_by_source_delete)
+        u = gate(base & ~d,
+                 when_not_matched_by_source_update_condition or True) \
+            if when_not_matched_by_source_update else F.lit(False)
+        return d, u
+
+    # keys match NULL-SAFELY on every clause path (a null-key source
+    # row that matched a null-key target row must not also insert)
+    key_eq = _ft.reduce(_op.and_, [
+        F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in key_cols])
     deltas = list(manifest.get("deltas", []))
     old_tombs = list(manifest.get("tombstones", []))
     if old_tombs and list(manifest.get("tombstone_key", [])) \
             != list(key_cols):
         raise ValueError(
-            f"merge_zordered: outstanding tombstones are keyed "
-            f"{manifest.get('tombstone_key')}, merge uses "
+            f"{verb}: outstanding tombstones are keyed "
+            f"{manifest.get('tombstone_key')}, {op} uses "
             f"{list(key_cols)} — run compact_zordered(path) first")
     spec = manifest["spec"]
     dims = [c for c, _, _ in _spec_dims(spec)]
@@ -2267,7 +2238,7 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
         frozen = set(clause or ()) & (set(dims) | set(key_cols))
         if frozen:
             raise ValueError(
-                f"merge_zordered: UPDATE SET on key/layout-dimension "
+                f"{verb}: UPDATE SET on key/layout-dimension "
                 f"column(s) {sorted(frozen)} — a moved row belongs in "
                 f"another bucket; express it as delete + insert")
     # one pass over the source serves the duplicate-key check, the
@@ -2289,14 +2260,14 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
                     F.collect_set("__zb").alias("__bks")).collect()[0])
     if (src_agg["__mx"] or 0) > 1:
         raise ValueError(
-            "merge_zordered: multiple source rows share a merge key — "
+            f"{verb}: multiple source rows share a merge key — "
             "each target row may match at most one source row")
     if int(src_agg["__nullzb"] or 0):
         # collect_set silently drops null zbuckets — a source row with
         # a null layout-dimension value would be written without its
         # bucket ever being marked dirty; refuse loudly instead
         raise ValueError(
-            f"merge_zordered: {int(src_agg['__nullzb'])} source "
+            f"{verb}: {int(src_agg['__nullzb'])} source "
             f"key(s) carry a NULL layout-dimension value — they map "
             f"to no zbucket, so the keyed rewrite cannot place them; "
             f"clean the source or delete+append instead")
@@ -2305,17 +2276,8 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
     # fold any outstanding delta batches in this commit: their rows
     # are live (the matched-row search must see them) and the dirtied
     # set grows to cover the buckets they route into
-    delta = None
-    for d in deltas:
-        dd = _read_delta_batch(spark, path, manifest, d)
-        delta = dd if delta is None else \
-            delta.unionByName(dd, allowMissingColumns=True)
     tomb = _tombstone_keys(spark, path, manifest)
-    if delta is not None and tomb is not None:
-        # delta rows for a tombstoned key were never visible — they
-        # fold away exactly as compact_zordered folds them (tomb
-        # carries its own file-size-gated broadcast hint)
-        delta = delta.join(tomb, key_cols, "left_anti")
+    delta = _outstanding_delta(spark, path, manifest, tomb)
     dirtied = {int(b) for b in src_agg["__bks"]}
     if delta is not None:
         dirtied |= set(_touched_buckets(delta, spec))
@@ -2325,33 +2287,17 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
         # scan (keys + condition columns + the zbucket partition
         # column) finds every bucket holding a VISIBLE row with no
         # source match that passes some clause condition — only those
-        # join the dirtied set. Exactness of the bucket bound relies
-        # on the same predicates the clause logic applies below.
+        # join the dirtied set, judged by the same predicates the
+        # rewrite applies below.
         live_t = _read_live(spark, path, manifest)
         if tomb is not None:
             live_t = live_t.join(tomb, key_cols, "left_anti")
-        live_t = live_t.alias("t")
-        anti_on = _ft.reduce(
-            _op.and_, [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-                       for k in key_cols])
-        miss = live_t.join(
+        miss = live_t.alias("t").join(
             broadcast_if_counted(source.select(*key_cols).alias("s"),
                                  known_rows=n_src),
-            anti_on, "left_anti")
-        unconditional = (when_not_matched_by_source_delete is True) or \
-            (bool(when_not_matched_by_source_update) and
-             when_not_matched_by_source_update_condition is None)
-        if not unconditional:
-            preds = []
-            if when_not_matched_by_source_delete:
-                preds.append(F.coalesce(
-                    F.expr(when_not_matched_by_source_delete),
-                    F.lit(False)))
-            if when_not_matched_by_source_update:
-                preds.append(F.coalesce(
-                    F.expr(when_not_matched_by_source_update_condition),
-                    F.lit(False)))
-            miss = miss.where(_ft.reduce(_op.or_, preds))
+            key_eq, "left_anti")
+        d, u = not_matched_by_source(F.lit(True))
+        miss = miss.where(d | u)
         dirtied |= {int(r[0]) for r in
                     miss.select("zbucket").distinct().collect()
                     if r[0] is not None}
@@ -2374,51 +2320,26 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
     s = broadcast_if_counted(
         source.withColumn("__src", F.lit(1)).alias("s"),
         known_rows=n_src)
-    on = _ft.reduce(_op.and_, [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-                               for k in key_cols])
-    joined = t.join(s, on, "left")
+    joined = t.join(s, key_eq, "left")
     matched = F.col("s.__src").isNotNull()
-    if when_matched_delete is True:
-        del_cond = matched
-    elif when_matched_delete:
-        del_cond = matched & F.coalesce(F.expr(when_matched_delete),
-                                        F.lit(False))
-    else:
-        del_cond = F.lit(False)
-    if when_matched_update:
-        upd_cond = matched & ~del_cond
-        if update_condition:
-            upd_cond = upd_cond & F.coalesce(F.expr(update_condition),
-                                             F.lit(False))
-    else:
-        upd_cond = F.lit(False)
-    # WHEN NOT MATCHED BY SOURCE mirrors the matched family on the
-    # other side of the join: delete first, update second, conditions
-    # t-scoped (there is no source row to reference)
-    if when_not_matched_by_source_delete is True:
-        nmbs_del = ~matched
-    elif when_not_matched_by_source_delete:
-        nmbs_del = ~matched & F.coalesce(
-            F.expr(when_not_matched_by_source_delete), F.lit(False))
-    else:
-        nmbs_del = F.lit(False)
-    if when_not_matched_by_source_update:
-        nmbs_upd = ~matched & ~nmbs_del
-        if when_not_matched_by_source_update_condition:
-            nmbs_upd = nmbs_upd & F.coalesce(
-                F.expr(when_not_matched_by_source_update_condition),
-                F.lit(False))
-    else:
-        nmbs_upd = F.lit(False)
+    # a row takes at most one clause: delete wins over update, and
+    # WHEN NOT MATCHED BY SOURCE mirrors that on the other side
+    del_cond = gate(matched, when_matched_delete)
+    upd_cond = gate(matched & ~del_cond, update_condition or True) \
+        if when_matched_update else F.lit(False)
+    nmbs_del, nmbs_upd = not_matched_by_source(~matched)
+    # a SET target the table lacks ADDS the column (schema evolution,
+    # as append and upsert do): NULL on rows no clause sets it for
+    targets = dict.fromkeys([*cols, *(when_matched_update or ()),
+                             *(when_not_matched_by_source_update or ())])
     out_cols = []
-    for c in cols:
-        e = F.col(f"t.{c}")
-        if when_not_matched_by_source_update and \
-                c in when_not_matched_by_source_update:
+    for c in targets:
+        e = F.col(f"t.{c}") if c in cols else F.lit(None)
+        if c in (when_not_matched_by_source_update or {}):
             e = F.when(nmbs_upd,
                        F.expr(when_not_matched_by_source_update[c])) \
                 .otherwise(e)
-        if when_matched_update and c in when_matched_update:
+        if c in (when_matched_update or {}):
             e = F.when(upd_cond, F.expr(when_matched_update[c])) \
                 .otherwise(e)
         out_cols.append(e.alias(c))
@@ -2426,77 +2347,47 @@ def merge_zordered(source: DataFrame, path: str, key_cols: list[str],
 
     ins = None
     if when_not_matched_insert:
-        # same null-safe key predicate as the match: a null-key source
-        # row that fired a matched clause must NOT also insert (a
-        # plain column-name anti-join would let it through — null
-        # never equals null there)
-        anti_on = _ft.reduce(
-            _op.and_, [F.col(f"s.{k}").eqNullSafe(F.col(f"t.{k}"))
-                       for k in key_cols])
+        # the match's own null-safe key predicate (a plain column-name
+        # anti-join would let a matched null-key row insert too).
         # old's key projection is TABLE-side (dirtied buckets): its
         # stats descend from parquet file bytes, so the plan-estimate
         # gate is trustworthy here — small dirtied sets keep the hint,
         # a 100 TB-scale dirtied set demotes to a shuffled join
         ins = source.alias("s").join(
             broadcast_if_small(old.select(*key_cols).alias("t")),
-            anti_on, "left_anti")
+            key_eq, "left_anti")
         if insert_condition:
-            ins = ins.alias("s").where(
-                F.coalesce(F.expr(insert_condition), F.lit(False)))
+            ins = ins.alias("s").where(gate(F.lit(True), insert_condition))
     changed = joined.where(upd_cond | nmbs_upd).select(*out_cols)
     if ins is not None:
         changed = changed.unionByName(ins, allowMissingColumns=True)
-    _validate_check(changed, spec, "merge_zordered")
+    _validate_check(changed, spec, verb)
 
     merged = kept if ins is None \
         else kept.unionByName(ins, allowMissingColumns=True)
     # keys the merge actually INSERTED stop being tombstoned (their
     # visible row is the new one); every other tombstoned key stays
     # hidden via a rewritten (smaller) tombstone batch
-    remaining_name = None
+    fields = {}
     if old_tombs:
         remaining = tomb if ins is None else tomb.join(
             broadcast_if_counted(ins.select(*key_cols),
                                  known_rows=n_src),
             key_cols, "left_anti")
         if remaining.count() > 0:
-            remaining_name = f"t-{uuid.uuid4().hex}"
+            name = f"t-{uuid.uuid4().hex}"
             remaining.write.mode("errorifexists").parquet(
-                fsio._join(path, TOMBSTONE_DIR, remaining_name))
-    change_name = None
+                fsio._join(path, TOMBSTONE_DIR, name))
+            fields = {"tombstones": [name],
+                      "tombstone_key": list(key_cols)}
     if emit_changes:
-        change_name = _write_change_file(
+        fields["change_file"] = _write_change_file(
             _classify_diff(old, merged, key_cols), path)
-    gen = _new_gen()
-    _write_clustered(merged, fsio._join(path, DATA_DIR), spec, gen,
-                     files_per_bucket)
-    wb, new_stats, new_cols = _written_meta(spark, path, gen, spec)
-    survivors = set(wb)
-
-    def rebase(latest: dict) -> dict:
-        out = _rebase_bucket_rewrite(
-            latest, manifest, dirtied, survivors, gen, new_stats,
-            "merge", folded_deltas=deltas,
-            folded_tombstones=old_tombs,
-            require_tombstones_unchanged=bool(old_tombs),
-            gen_cols=new_cols)
-        if remaining_name is not None:
-            out["tombstones"] = [remaining_name]
-            out["tombstone_key"] = list(key_cols)
-        if emit_changes:
-            out["change_file"] = change_name
-        return out
-
-    v, final = _commit(spark, path, rebase(manifest), "merge", base_v,
-                       rebase=rebase,
-                       metrics=_rewrite_metrics(
-                           dirtied, new_stats,
-                           deltas_folded=len(deltas),
-                           tombstones_folded=len(old_tombs)))
-    if vacuum:
-        _cleanup_superseded(spark, path, manifest, final)
-        _set_min_live_version(spark, path, v)
-        fsio.prune_versions(spark, _manifest_path(path))
+    v, _ = _rewrite_buckets(
+        spark, path, base_v, manifest, op, dirtied, merged,
+        files_per_bucket, vacuum, folded_deltas=deltas,
+        folded_tombstones=old_tombs,
+        require_tombstones_unchanged=bool(old_tombs), fields=fields)
     return {"buckets_rewritten": len(dirtied), "version": v}
 
 
@@ -2540,25 +2431,8 @@ def optimize_zordered(spark: SparkSession, path: str,
                 "buckets_total": len(manifest["gens"])}
     old = read_zordered_box_dirs(spark, path, manifest, frag) \
         .drop("zbucket")
-    gen = _new_gen()
-    _write_clustered(old, fsio._join(path, DATA_DIR), spec, gen,
-                     files_per_bucket)
-    wb, new_stats, new_cols = _written_meta(spark, path, gen, spec)
-    survivors = set(wb)
-
-    def rebase(latest: dict) -> dict:
-        return _rebase_bucket_rewrite(
-            latest, manifest, frag, survivors, gen, new_stats,
-            "optimize", gen_cols=new_cols)
-
-    new_manifest = rebase(manifest)
-    v, final = _commit(spark, path, new_manifest, "optimize", base_v,
-                       rebase=rebase,
-                       metrics=_rewrite_metrics(frag, new_stats))
-    if vacuum:
-        _cleanup_superseded(spark, path, manifest, final)
-        _set_min_live_version(spark, path, v)
-        fsio.prune_versions(spark, _manifest_path(path))
+    _, final = _rewrite_buckets(spark, path, base_v, manifest, "optimize",
+                                frag, old, files_per_bucket, vacuum)
     return {"buckets_rewritten": len(frag),
             "buckets_total": len(final["gens"])}
 
@@ -3723,34 +3597,13 @@ def delete_zordered_box(spark: SparkSession, path: str,
     old = read_zordered_box_dirs(spark, path, manifest, candidates) \
         .drop("zbucket")
     in_box = ((a >= a_lo) & (a <= a_hi) & (b >= b_lo) & (b <= b_hi))
-    keep = old.where(~in_box)
-    change_name = None
+    fields = None
     if emit_changes:
-        change_name = _write_change_file(
+        fields = {"change_file": _write_change_file(
             old.where(in_box).withColumn("_change_type",
-                                         F.lit("delete")), path)
-    gen = _new_gen()
-    _write_clustered(keep, fsio._join(path, DATA_DIR), spec, gen,
-                     files_per_bucket)
-    wb, new_stats, new_cols = _written_meta(spark, path, gen, spec)
-    survivors = set(wb)
-
-    def rebase(latest: dict) -> dict:
-        # a bucket emptied by the delete drops out of the manifest
-        # outright (candidates not in survivors)
-        out = _rebase_bucket_rewrite(
-            latest, manifest, candidates, survivors, gen, new_stats,
-            "delete_box", gen_cols=new_cols)
-        if emit_changes:
-            out["change_file"] = change_name
-        return out
-
-    new_manifest = rebase(manifest)
-    v, final = _commit(spark, path, new_manifest, "delete_box", base_v,
-                       rebase=rebase,
-                       metrics=_rewrite_metrics(candidates, new_stats))
-    if vacuum:
-        _cleanup_superseded(spark, path, manifest, final)
-        _set_min_live_version(spark, path, v)
-        fsio.prune_versions(spark, _manifest_path(path))
+                                         F.lit("delete")), path)}
+    # a bucket emptied by the delete drops out of the manifest outright
+    _rewrite_buckets(spark, path, base_v, manifest, "delete_box",
+                     candidates, old.where(~in_box), files_per_bucket,
+                     vacuum, fields=fields)
     return spec

@@ -3,6 +3,7 @@ co-located join (write-time shuffle buys zero-exchange joins)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from aggregation_duckdb_spark.io import load_table
@@ -629,11 +630,12 @@ def test_zorder_zonemap_skips_correlated_column_buckets(spark, tmp_path):
                  .select("a", "b", "payload").collect())
     assert got == want
 
-    # upsert refreshes only dirtied buckets' stats
+    # upsert refreshes only dirtied buckets' stats; payload repeats
+    # across rows, so the batch keys on the unique (a, b, payload)
     up = df.where(F.col("payload") == 5_000).withColumn(
         "payload", F.col("payload"))  # same keys/dims, version bump
     L.upsert_zordered(up.select("a", "b", "payload"), path,
-                      ["payload"])
+                      ["a", "b", "payload"])
     m2 = L.read_manifest(spark, path)
     assert set(m2["stats"]) == set(m["stats"])   # coverage unchanged
     got2 = sorted((r.a, r.b, r.payload) for r in
@@ -1316,6 +1318,70 @@ def test_conflicting_bucket_rewrites_raise_cleanly(
     vals = {r.val for r in L.read_zordered(spark, path)
             .where(F.col("payload") < 10).collect()}
     assert vals == {-2}
+
+
+
+@pytest.mark.parametrize("verb", ["compact", "upsert", "merge",
+                                  "optimize", "delete_box"])
+def test_bucket_rewrite_survives_failed_commit(
+        spark, tmp_path, monkeypatch, verb):
+    """Every bucket-rewrite verb shares one write → read-back → commit
+    → cleanup tail: a manifest commit that fails with an IO error
+    leaves the table at its old version and contents (the written
+    generation is an invisible orphan, nothing was cleaned up), and
+    the same call then succeeds with the result of an uncrashed run."""
+    from aggregation_duckdb_spark import fsio
+    from aggregation_duckdb_spark.sources import layout as L
+    base = spark.range(0, 64).select(
+        (F.col("id") % 16).alias("a"), ((F.col("id") * 7) % 16).alias("b"),
+        F.col("id").alias("payload"), (F.col("id") * 10).alias("val"))
+    src = base.where(F.col("payload") % 5 == 0) \
+        .withColumn("val", F.lit(-1).cast("long"))
+    call = {
+        "compact": lambda p: L.compact_zordered(spark, p),
+        "upsert": lambda p: L.upsert_zordered(src, p, ["payload"]),
+        "merge": lambda p: L.merge_zordered(
+            src, p, ["payload"], when_matched_update={"val": "s.val"},
+            when_matched_delete="t.payload = 10"),
+        "optimize": lambda p: L.optimize_zordered(spark, p, min_files=0),
+        "delete_box": lambda p: L.delete_zordered_box(spark, p,
+                                                      0, 7, 0, 7),
+    }[verb]
+
+    def setup(p):
+        L.write_zordered(base, p, "a", "b", bits=4, bucket_bits=2)
+        if verb == "compact":
+            L.append_zordered(src.withColumn("payload",
+                                             F.col("payload") + 100), p)
+            L.delete_zordered_keys(src.select("payload"), p, ["payload"])
+
+    def rows(p):
+        return sorted(tuple(r) for r in L.read_zordered(spark, p).collect())
+
+    crashed, clean = str(tmp_path / "z_crash"), str(tmp_path / "z_clean")
+    setup(crashed)
+    setup(clean)
+    v0, before = L.table_version(spark, crashed), rows(crashed)
+    real = fsio.write_json_at
+    fired = {}
+
+    def fail_once(*args, **kwargs):
+        if not fired:
+            fired["x"] = True
+            raise OSError("injected manifest write failure")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(fsio, "write_json_at", fail_once)
+    with pytest.raises(OSError, match="injected"):
+        call(crashed)
+    assert L.table_version(spark, crashed) == v0
+    assert rows(crashed) == before
+    call(crashed)
+    call(clean)
+    assert L.table_version(spark, crashed) == v0 + 1
+    assert rows(crashed) == rows(clean)
+    # optimize only repacks files; every other verb changes rows
+    assert (rows(clean) != before) == (verb != "optimize")
 
 
 def test_upsert_composes_over_outstanding_tombstones(spark, tmp_path):
@@ -2243,30 +2309,75 @@ def test_merge_zordered_conditional_clauses(spark, tmp_path):
 
 def test_merge_zordered_replaces_upsert_semantics(spark, tmp_path):
     """merge with update=all-columns + unconditional insert must equal
-    upsert_zordered on the same input (the replace special case);
-    tombstones keyed on DIFFERENT columns than the merge still
-    refuse."""
+    upsert_zordered on the same input (the replace special case) —
+    snapshot AND stored change rows — over a plain replacement, a
+    null-key row over a stored null-key row (matched null-safely: one
+    row left), a batch column the table lacks (added: the
+    SET value on matched rows, NULL elsewhere) and a batch missing a
+    non-key column (NULLed on the replaced rows); duplicate batch
+    keys raise; tombstones keyed on DIFFERENT columns than the merge
+    still refuse."""
+    import os as _os
+
     import pytest as _pytest
     from aggregation_duckdb_spark.sources import layout as L
-    base = _zorder_kv_frame(spark)
-    p1, p2 = str(tmp_path / "z_m1"), str(tmp_path / "z_m2")
-    src = base.where(F.col("payload") % 9 == 0) \
-        .withColumn("val", F.lit(-7).cast("long"))
-    for p in (p1, p2):
-        L.write_zordered(base, p, "a", "b", bits=7, bucket_bits=4)
-    L.upsert_zordered(src, p1, ["payload"])
-    L.merge_zordered(src, p2, ["payload"],
-                     when_matched_update={"val": "s.val"})
-    a = sorted((r.payload, r.val) for r in
-               L.read_zordered(spark, p1).collect())
-    b = sorted((r.payload, r.val) for r in
-               L.read_zordered(spark, p2).collect())
-    assert a == b
+    schema = "a long, b long, payload long, val long"
+    base = _zorder_kv_frame(spark).unionByName(
+        spark.createDataFrame([(50, 50, None, 77)], schema))
+    hit = base.where(F.col("payload") % 9 == 0)
+    null_row = spark.createDataFrame([(50, 50, None, -1)], schema)
+    inputs = [
+        (hit.withColumn("val", F.lit(-7).cast("long")).unionByName(null_row)
+         .withColumn("w", F.lit(9).cast("long")),
+         {"val": "s.val", "w": "s.w"}),
+        (hit.drop("val"), {"val": "NULL", "w": "NULL"}),
+    ]
 
+    def rows(df):
+        return sorted((tuple(sorted(r.asDict().items()))
+                       for r in df.collect()), key=repr)
+
+    def changes(p):
+        name = L.read_manifest(spark, p)["change_file"]
+        return spark.read.parquet(_os.path.join(p, "_changes", name))
+
+    # the inputs run in sequence on one table per verb
+    p1, p2 = str(tmp_path / "z_m1"), str(tmp_path / "z_m2")
+    for p in (p1, p2):
+        L.write_zordered(base, p, "a", "b", bits=7, bucket_bits=2)
+    snaps = []
+    for src, sets in inputs:
+        L.upsert_zordered(src, p1, ["payload"], emit_changes=True)
+        L.merge_zordered(src, p2, ["payload"], when_matched_update=sets,
+                         emit_changes=True)
+        got = [(rows(L.read_zordered(spark, p)), rows(changes(p)))
+               for p in (p1, p2)]
+        assert got[0] == got[1]
+        snaps.append([dict(r) for r in got[0][0]])
+
+    def is_hit(r):
+        return r["payload"] is not None and r["payload"] % 9 == 0
+
+    # null key matched null-safely: ONE null-key row, replaced; the
+    # added column w holds the batch value on replaced rows only
+    assert len(snaps[0]) == 401
+    assert all((r["val"], r["w"]) == ((-7, 9) if is_hit(r) else (-1, 9)
+                                      if r["payload"] is None
+                                      else (10 * r["payload"], None))
+               for r in snaps[0])
+    # a batch without val and w NULLs both on the replaced rows only
+    assert all((r["val"] is None) == is_hit(r) for r in snaps[1])
+    assert all(r["w"] == (9 if r["payload"] is None else None)
+               for r in snaps[1])
+
+    with _pytest.raises(ValueError, match="upsert_zordered: multiple "
+                                          "source rows share a merge key"):
+        L.upsert_zordered(hit.unionByName(hit.where(F.col("payload") == 99)),
+                          p1, ["payload"])
     L.delete_zordered_keys(base.where(F.col("payload") == 1)
                            .select("val"), p2, ["val"])
     with _pytest.raises(ValueError, match="tombstones are keyed"):
-        L.merge_zordered(src, p2, ["payload"],
+        L.merge_zordered(inputs[0][0], p2, ["payload"],
                          when_matched_delete=True)
 
 
